@@ -1566,7 +1566,7 @@ object SparkEntry {
       Incremental.banded(
           Dedup.minhashSignatures(incoming, "doc_id", col("text"),
             numPerm = 64, shingleSize = 3),
-          "doc_id", bands = 16, r = 4)
+          "doc_id", numPerm = 64, bands = 16)
         .write.mode("overwrite").parquet(s"${stateDir(dir)}/q106_incoming")
       Incremental.minhashDedupAgainstTable(incoming, "doc_id", col("text"),
           s.table("graft_q106_sigs"), threshold = 0.8, numPerm = 64, bands = 16)

@@ -164,39 +164,27 @@ object Dedup {
   private[graft] def minhashSigForTest(tokens: Column, numPerm: Int = 256): Column =
     minhashSig(tokens, numPerm)
 
-  /** Banded MinHash LSH dedup — the classic shingle → minhash → band →
-    * bucket-join pipeline, built directly on DataFrame ops with the
-    * native [[graft.functions.MinHashSig]] expression.
-    *
-    * vs [[fuzzyDedup]] (spark.ml MinHashLSH): ml's LSH has only
-    * OR-amplification (each hash table = ONE MinHash function), so
-    * moderately-similar pairs collide constantly and the join
-    * explodes. Banding r rows per band gives AND-amplification —
-    * P(candidate) = 1-(1-J^r)^b — which suppresses sub-threshold pairs
-    * exponentially. Candidate verification is the exact signature
-    * agreement fraction; removal is a left_anti join (never a driver
-    * collect).
-    *
-    * Scale shape: one narrow map per row (signature), one explode ×
-    * bands (b small rows), one hash-partitioned self-join on
-    * (band, bucket), one window-free verify on candidate pairs.
-    * Skewed buckets (boilerplate shingles) are AQE-splittable.
-    */
-  /** Candidate (id_a, id_b) pairs whose estimated Jaccard (signature
-    * agreement fraction) meets `threshold` — the enumeration behind
-    * [[minhashDedup]], exposed so skew bounds are spec-testable.
-    *
-    * Skew hardening: a bucket of near-identical boilerplate (the same
-    * members colliding in EVERY band) makes the self-join O(B²) per
-    * band. Buckets larger than `maxBucketSize` switch to a star
-    * pattern — every member is verified against the bucket's min-id
-    * member only (B−1 pairs instead of B²). On the pathological case
-    * that creates oversized buckets (a near-clique), the star reaches
-    * the same removable set, because every member verifies against the
-    * min; a member of an oversized MIXED bucket that only matches some
-    * non-min member can be missed there, but it still collides with it
-    * in the other bands' (smaller) buckets. Cost is bounded at
-    * `bands × max(maxBucketSize, B−1)` per bucket either way. */
+  /** The MinHash band layout — the one definition of how a
+    * `numPerm`-long signature becomes collision keys, used by every
+    * banded path and persisted as the `(band, bucket)` columns of
+    * [[Incremental.writeBandedSignatures]]' state: `bands` structs
+    * `(band INT, bucket BIGINT)`, `bucket` = xxhash64 of the band's
+    * `r = numPerm / bands` consecutive slots (AND-amplification within
+    * a band, OR across bands). */
+  private[operators] def bandKeys(sig: Column, numPerm: Int, bands: Int): Column = {
+    require(numPerm % bands == 0, "bands must divide numPerm")
+    val r = numPerm / bands
+    transform(sequence(lit(0), lit(bands - 1)),
+      b => struct(b.as("band"), xxhash64(slice(sig, b * r + 1, lit(r))).as("bucket")))
+  }
+
+  /** Estimated Jaccard of two `numPerm`-long signatures — the fraction
+    * of agreeing slots ([[graft.functions.SigAgreeCount]]), the verify
+    * every banded MinHash path applies to its candidate pairs. */
+  private[operators] def sigJaccard(a: Column, b: Column, numPerm: Int): Column =
+    text.expr2col(graft.functions.SigAgreeCount(
+      text.col2expr(a), text.col2expr(b))).cast("double") / numPerm
+
   /** Candidate enumeration from an already-signed frame `(id, __sig)`.
     * The bucket-size stats aggregation carries ONLY counts (signature
     * arrays never enter its shuffle); min-id signatures are aggregated
@@ -206,15 +194,13 @@ object Dedup {
       withSig: DataFrame, idCol: String,
       threshold: Double, numPerm: Int, bands: Int,
       maxBucketSize: Int): DataFrame = {
-    val r = numPerm / bands
     // ids-only banded rows: the (band, bucket) exchange — the widest
     // in the operator — carries ~28-byte rows, never the numPerm-long
     // signature. The earlier sig-carrying formulation shuffled and
     // SMJ-sorted ~1 KB rows (measured 5 GB vs 130 MB on a 150k-doc
     // rehearsal; that exchange dominated the whole operator).
     val banded = withSig.select(col(idCol),
-      explode(transform(sequence(lit(0), lit(bands - 1)),
-        b => struct(b.as("band"), xxhash64(slice(col("__sig"), b * r + 1, lit(r))).as("bucket")))).as("__b"))
+      explode(bandKeys(col("__sig"), numPerm, bands)).as("__b"))
       .select(col(idCol), col("__b.band"), col("__b.bucket"))
     val sizes = banded.groupBy(col("band"), col("bucket"))
       .agg(count(lit(1)).as("__bsz"))
@@ -240,14 +226,11 @@ object Dedup {
     // BEFORE the verify; signatures re-attach to the few unique
     // candidates by id, and the (numPerm-position) native agreement
     // kernel runs once per pair instead of once per colliding band.
-    def estJaccard(x: Column, y: Column): Column =
-      text.expr2col(graft.functions.SigAgreeCount(
-        text.col2expr(x), text.col2expr(y))).cast("double") / numPerm
     val sa = withSig.select(col(idCol).as("id_a"), col("__sig").as("__siga"))
     val sb = withSig.select(col(idCol).as("id_b"), col("__sig").as("__sigb"))
     smallPairs.union(bigPairs).distinct()
       .join(sa, Seq("id_a")).join(sb, Seq("id_b"))
-      .filter(estJaccard(col("__siga"), col("__sigb")) >= threshold)
+      .filter(sigJaccard(col("__siga"), col("__sigb"), numPerm) >= threshold)
       .select(col("id_a"), col("id_b"))
   }
 
@@ -256,6 +239,21 @@ object Dedup {
     spreadWide(df).select(col(idCol),
       minhashSig(shingles(text.norm_key(textCol), shingleSize), numPerm).as("__sig"))
 
+  /** Candidate (id_a, id_b) pairs whose estimated Jaccard (signature
+    * agreement fraction) meets `threshold` — the enumeration behind
+    * [[minhashDedup]], exposed so skew bounds are spec-testable.
+    *
+    * Skew hardening: a bucket of near-identical boilerplate (the same
+    * members colliding in EVERY band) makes the self-join O(B²) per
+    * band. Buckets larger than `maxBucketSize` switch to a star
+    * pattern — every member is verified against the bucket's min-id
+    * member only (B−1 pairs instead of B²). On the pathological case
+    * that creates oversized buckets (a near-clique), the star reaches
+    * the same removable set, because every member verifies against the
+    * min; a member of an oversized MIXED bucket that only matches some
+    * non-min member can be missed there, but it still collides with it
+    * in the other bands' (smaller) buckets. Cost is bounded at
+    * `bands × max(maxBucketSize, B−1)` per bucket either way. */
   private[graft] def minhashCandidates(
       df: DataFrame,
       idCol: String,
@@ -264,16 +262,34 @@ object Dedup {
       numPerm: Int,
       bands: Int,
       shingleSize: Int,
-      maxBucketSize: Int): DataFrame = {
-    require(numPerm % bands == 0, "bands must divide numPerm")
+      maxBucketSize: Int): DataFrame =
     // the candidate plan reads the signed frame from three subplans
     // (banded rows + both re-attach sides) — the standalone entry
     // point leaves it lazy so plan-shape specs can inspect the full
-    // tree; minhashDedup persists it around this call.
+    // tree; minhashDedupFromSigs persists it around this call.
     candidatesFromSig(signed(df, idCol, textCol, numPerm, shingleSize),
       idCol, threshold, numPerm, bands, maxBucketSize)
-  }
 
+  /** Banded MinHash LSH dedup — the classic shingle → minhash → band →
+    * bucket-join pipeline, built directly on DataFrame ops with the
+    * native [[graft.functions.MinHashSig]] expression.
+    *
+    * vs [[fuzzyDedup]] (spark.ml MinHashLSH): ml's LSH has only
+    * OR-amplification (each hash table = ONE MinHash function), so
+    * moderately-similar pairs collide constantly and the join
+    * explodes. Banding r rows per band gives AND-amplification —
+    * P(candidate) = 1-(1-J^r)^b — which suppresses sub-threshold pairs
+    * exponentially. Candidate verification is the exact signature
+    * agreement fraction; removal is a left_anti join (never a driver
+    * collect).
+    *
+    * Scale shape: one narrow map per row (signature), one explode ×
+    * bands (b small rows), one hash-partitioned self-join on
+    * (band, bucket), one window-free verify on candidate pairs.
+    * Skewed buckets (boilerplate shingles) are AQE-splittable; buckets
+    * over `maxBucketSize` degrade to star verification
+    * ([[minhashCandidates]]). Signs the input, then runs
+    * [[minhashDedupFromSigs]]. */
   def minhashDedup(
       df: DataFrame,
       idCol: String,
@@ -282,32 +298,9 @@ object Dedup {
       numPerm: Int = 128,
       bands: Int = 32,
       shingleSize: Int = 3,
-      maxBucketSize: Int = 1024): DataFrame = {
-    require(numPerm % bands == 0, "bands must divide numPerm")
-    // signatures are the expensive narrow map (numPerm hashes per
-    // shingle); the candidate plan references the signed frame from
-    // several subplans (both self-join sides + the size stats), so
-    // persist it for the duration of the dup-id computation — same
-    // cache-then-localCheckpoint discipline as fuzzyDedup: the dup-id
-    // set (ids only) is materialized eagerly, the cache released, and
-    // the returned anti-join stays lazy.
-    val withSig = signed(df, idCol, textCol, numPerm, shingleSize)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // Materialize the cache EAGERLY: the candidate plan fans out into
-      // ~8 independent map stages (band explode sides, bucket-size agg,
-      // star-verify agg) that AQE submits concurrently — against a lazy
-      // cache they all miss and each recomputes the full signature pass
-      // (observable as "Block rdd_N already exists" warnings and an 8×
-      // signature cost). One count() populates the cache first, so the
-      // fan-out reads blocks.
-      withSig.count()
-      val dupIds = candidatesFromSig(withSig, idCol, threshold, numPerm, bands, maxBucketSize)
-        .select(col("id_b").as(idCol)).distinct()
-        .localCheckpoint(true)
-      df.join(dupIds, Seq(idCol), "left_anti")
-    } finally withSig.unpersist(blocking = false)
-  }
+      maxBucketSize: Int = 1024): DataFrame =
+    minhashDedupFromSigs(df, idCol, signed(df, idCol, textCol, numPerm, shingleSize),
+      threshold, numPerm, bands, maxBucketSize)
 
   /** Persistable MinHash signature table `(idCol, __sig)` — compute
     * ONCE per corpus and store as parquet: incremental ingestion then
@@ -322,9 +315,8 @@ object Dedup {
     * back from parquet): signatures are the operator's expensive
     * narrow map, so a caller that has them persisted — the recurring-
     * ingestion shape, or a query that just exported them — should not
-    * pay the shingle+hash pass twice. Same candidate/verify/anti-join
-    * pipeline and the same cache discipline; `sigDf` must cover
-    * exactly `df`'s rows with `numPerm`-long signatures. */
+    * pay the shingle+hash pass twice. `sigDf` must cover exactly
+    * `df`'s rows with `numPerm`-long signatures. */
   def minhashDedupFromSigs(
       df: DataFrame, idCol: String, sigDf: DataFrame,
       threshold: Double = 0.8,
@@ -332,10 +324,23 @@ object Dedup {
       bands: Int = 32,
       maxBucketSize: Int = 1024): DataFrame = {
     require(numPerm % bands == 0, "bands must divide numPerm")
+    // the candidate plan references the signed frame from several
+    // subplans (both self-join sides + the size stats), so persist it
+    // for the duration of the dup-id computation — same
+    // cache-then-localCheckpoint discipline as fuzzyDedup: the dup-id
+    // set (ids only) is materialized eagerly, the cache released, and
+    // the returned anti-join stays lazy.
     val withSig = sigDf
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      withSig.count() // eager: the candidate plan fans out (see minhashDedup)
+      // Materialize the cache EAGERLY: the candidate plan fans out into
+      // ~8 independent map stages (band explode sides, bucket-size agg,
+      // star-verify agg) that AQE submits concurrently — against a lazy
+      // cache they all miss and each recomputes the full signature pass
+      // (observable as "Block rdd_N already exists" warnings and an 8×
+      // signature cost). One count() populates the cache first, so the
+      // fan-out reads blocks.
+      withSig.count()
       val dupIds = candidatesFromSig(withSig, idCol, threshold, numPerm, bands, maxBucketSize)
         .select(col("id_b").as(idCol)).distinct()
         .localCheckpoint(true)
@@ -364,7 +369,6 @@ object Dedup {
       bands: Int = 32,
       shingleSize: Int = 3): DataFrame = {
     require(numPerm % bands == 0, "bands must divide numPerm")
-    val r = numPerm / bands
     // ids-only banded rows — the band explode multiplies every row by
     // `bands`, so a signature riding it crosses the (band, bucket)
     // exchange `bands` TIMES over (the corpus side of this bipartite
@@ -378,12 +382,8 @@ object Dedup {
     // from disk with no exchange at all).
     def banded(sigDf: DataFrame, idC: String, side: String): DataFrame =
       sigDf.select(col(idC).as(s"__id$side"),
-        explode(transform(sequence(lit(0), lit(bands - 1)),
-          b => struct(b.as("band"), xxhash64(slice(col("__sig"), b * r + 1, lit(r))).as("bucket")))).as("__b"))
+        explode(bandKeys(col("__sig"), numPerm, bands)).as("__b"))
         .select(col(s"__id$side"), col("__b.band"), col("__b.bucket"))
-    def estJaccard(x: Column, y: Column): Column =
-      text.expr2col(graft.functions.SigAgreeCount(
-        text.col2expr(x), text.col2expr(y))).cast("double") / numPerm
     val corpusIdCol = corpusSigned.columns.head
     val incSigned = signed(incoming, idCol, textCol, numPerm, shingleSize)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -396,7 +396,7 @@ object Dedup {
         .join(incSigned.select(col(idCol).as("__idI"), col("__sig").as("__sigI")), Seq("__idI"))
         .join(corpusSigned.select(col(corpusIdCol).as("__idC"), col("__sig").as("__sigC")),
           Seq("__idC"))
-        .filter(estJaccard(col("__sigI"), col("__sigC")) >= threshold)
+        .filter(sigJaccard(col("__sigI"), col("__sigC"), numPerm) >= threshold)
         .select(col("__idI").as(idCol)).distinct()
         .localCheckpoint(true)
       incoming.join(dupIds, Seq(idCol), "left_anti")
@@ -1128,21 +1128,8 @@ object Dedup {
     * (/root/reference/pipeline/processing/deduplication.py:19-31) —
     * re-expressed as an exact relational algorithm instead of a cap. */
   def jaccardPairs(df: DataFrame, idCol: String, textCol: Column,
-      t: Double, n: Int = 3): DataFrame = {
-    require(t > 0 && t <= 1, "threshold must be in (0, 1]")
-    // The token join is a broadcast join when one side fits, so NO
-    // exchange precedes it — the explode→join→partial-agg pipeline
-    // (the Σdf² fan-out, the expensive part of the whole operator)
-    // inherits the SCAN's partitioning. A source with fewer splits
-    // than cores (one unsplittable file, a gzip'd dump) would run it
-    // near-sequentially; spread it first. Well-partitioned at-scale
-    // inputs skip the extra shuffle entirely.
-    val tok = tokens(spreadWide(df), idCol, textCol, n)
-    countedPairs(
-      tok.select(col("__id").as("id_a"), col("__sz").as("__sza"), col("__gram")),
-      tok.select(col("__id").as("id_b"), col("__sz").as("__szb"), col("__gram")),
-      t, antiReflexive = true)
-  }
+      t: Double, n: Int = 3): DataFrame =
+    exactJaccard(df, idCol, textCol, None, t, n)
 
   /** Exact BIPARTITE n-gram Jaccard join: every (left, right) pair
     * across two corpora with J ≥ `t` — the same count-based exact
@@ -1159,13 +1146,25 @@ object Dedup {
   def jaccardJoin(
       left: DataFrame, leftId: String, leftText: Column,
       right: DataFrame, rightId: String, rightText: Column,
-      t: Double, n: Int = 3): DataFrame = {
+      t: Double, n: Int = 3): DataFrame =
+    exactJaccard(left, leftId, leftText, Some((right, rightId, rightText)), t, n)
+
+  /** The exact count join behind [[jaccardPairs]] (`right = None`: the
+    * self-join, pairs oriented id_a < id_b) and [[jaccardJoin]]
+    * (bipartite, every cross pair once). */
+  private def exactJaccard(left: DataFrame, leftId: String, leftText: Column,
+      right: Option[(DataFrame, String, Column)], t: Double, n: Int): DataFrame = {
     require(t > 0 && t <= 1, "threshold must be in (0, 1]")
-    val ta = tokens(spreadWide(left), leftId, leftText, n)
-      .select(col("__id").as("id_a"), col("__sz").as("__sza"), col("__gram"))
-    val tb = tokens(spreadWide(right), rightId, rightText, n)
-      .select(col("__id").as("id_b"), col("__sz").as("__szb"), col("__gram"))
-    countedPairs(ta, tb, t, antiReflexive = false)
+    // The token join is a broadcast join when one side fits, so NO
+    // exchange precedes it — the explode→join→partial-agg pipeline
+    // (the Σdf² fan-out, the expensive part of the whole operator)
+    // inherits the SCAN's partitioning. A source with fewer splits
+    // than cores (one unsplittable file, a gzip'd dump) would run it
+    // near-sequentially; spread it first. Well-partitioned at-scale
+    // inputs skip the extra shuffle entirely.
+    val ta = tokens(gramSets(spreadWide(left), leftId, leftText, n))
+    val tb = right.fold(ta) { case (r, rId, rText) => tokens(gramSets(spreadWide(r), rId, rText, n)) }
+    countedPairs(ta, tb, t, antiReflexive = right.isEmpty)
   }
 
   /** Decontamination: drop every `corpus` row whose text is ≥ `t`
@@ -1257,10 +1256,9 @@ object Dedup {
       .select(col("__ta"), col("__tb"))
   }
 
-  /** `(__id, __sz, __gram)` exploded token stream of a doc frame. */
-  private def tokens(df: DataFrame, idCol: String, textCol: Column, n: Int): DataFrame =
-    gramSets(df, idCol, textCol, n)
-      .select(col("__id"), size(col("__g")).as("__sz"), explode(col("__g")).as("__gram"))
+  /** `(__id, __sz, __gram)` exploded token stream of a [[gramSets]] frame. */
+  private def tokens(sets: DataFrame): DataFrame =
+    sets.select(col("__id"), size(col("__g")).as("__sz"), explode(col("__g")).as("__gram"))
 
   /** Repartition an under-split source up to the session's default
     * parallelism. Expensive narrow maps (LSH featurization, MinHash/
@@ -1291,12 +1289,13 @@ object Dedup {
     }
   }
 
-  /** Count-based pair enumeration shared by [[jaccardPairs]] (self
-    * join, `antiReflexive` orients pairs id_a < id_b) and
-    * [[jaccardJoin]] (bipartite, every cross pair once). Inputs are
-    * `(id_a|id_b, __sza|__szb, __gram)` token streams. */
+  /** Count-based pair enumeration shared by the self join
+    * (`antiReflexive` orients pairs id_a < id_b) and the bipartite one
+    * (every cross pair once). Inputs are [[tokens]] streams. */
   private def countedPairs(
-      a: DataFrame, b: DataFrame, t: Double, antiReflexive: Boolean): DataFrame = {
+      ta: DataFrame, tb: DataFrame, t: Double, antiReflexive: Boolean): DataFrame = {
+    val a = ta.select(col("__id").as("id_a"), col("__sz").as("__sza"), col("__gram"))
+    val b = tb.select(col("__id").as("id_b"), col("__sz").as("__szb"), col("__gram"))
     // ε guards float noise in t·size (0.3·10 = 3.0000000000000004),
     // and the relaxed t−1e-6 covers pairs whose true J sits just below
     // t but ROUNDS to ≥ t (the output filter is on the rounded value):
@@ -1366,8 +1365,7 @@ object Dedup {
       t: Double, n: Int = 3): DataFrame = {
     require(t > 0 && t <= 1, "threshold must be in (0, 1]")
     val sets = gramSets(spreadWide(df), idCol, textCol, n)
-    val tok = sets
-      .select(col("__id"), size(col("__g")).as("__sz"), explode(col("__g")).as("__gram"))
+    val tok = tokens(sets)
     val dfTab = tok.groupBy(col("__gram")).agg(count(lit(1)).as("__df"))
     // The output filter is on ROUNDED J ≥ t, which admits true J down
     // to t − 5e-7 — so all pruning runs at the relaxed tC < t (longer
@@ -1406,23 +1404,23 @@ object Dedup {
     df.select(col(idCol).as("__id"), grams.as("__g"))
   }
 
-  /** Σ_gram df² — the exact count-based pair join's joined-row count —
-    * from one narrow tokenize pass plus a vocabulary-sized aggregation.
-    * This is [[jaccardPairsAuto]]'s routing probe: the quantity that
-    * goes quadratic on gram-saturated corpora (ADR-003's 48-hour
-    * lesson) is measurable for the cost of a map-side count BEFORE the
-    * join is committed to. */
-  private[graft] def gramJoinRows(df: DataFrame, idCol: String, textCol: Column,
-      n: Int): Long = {
-    val tok = tokens(spreadWide(df), idCol, textCol, n)
-    val row = tok.groupBy(col("__gram")).agg(count(lit(1)).as("__df"))
-      .agg(coalesce(sum(col("__df") * col("__df")), lit(0L)).as("__rows"))
-      .head()
-    row.getLong(0)
+  /** Σ_gram dfA·dfB — the exact count join's joined-row count — over
+    * two [[gramSets]] frames; one frame passed twice gives the self
+    * join's Σ df². This is the Jaccard router's probe: the quantity
+    * that goes quadratic on gram-saturated corpora (ADR-003's 48-hour
+    * nested-loop lesson; 20.6× growth at 10× in the round-4 two-sided
+    * rehearsal) is measurable for the cost of a map-side count per side
+    * plus a vocabulary-sized join BEFORE the pair join is committed to. */
+  private[graft] def gramJoinRows(setsA: DataFrame, setsB: DataFrame): Long = {
+    def df(sets: DataFrame, c: String): DataFrame =
+      tokens(sets).groupBy(col("__gram")).agg(count(lit(1)).as(c))
+    df(setsA, "__dfa").join(df(setsB, "__dfb"), Seq("__gram"))
+      .agg(coalesce(sum(col("__dfa") * col("__dfb")), lit(0L)).as("__rows"))
+      .head().getLong(0)
   }
 
-  /** Band width r for [[jaccardPairsBanded]]: the widest divisor of
-    * `numPerm` whose per-pair MISS probability at J = t,
+  /** Band width r for the Jaccard router's banded route: the widest
+    * divisor of `numPerm` whose per-pair MISS probability at J = t,
     * (1 − t^r)^(numPerm/r), stays ≤ 1e-6. Wider bands (AND-
     * amplification) suppress sub-threshold candidates exponentially;
     * the bound keeps threshold-passing pairs from being suppressed
@@ -1432,96 +1430,38 @@ object Dedup {
       (numPerm / r) * math.log1p(-math.pow(t, r)) <= math.log(1e-6)
     }.maxOption.getOrElse(1)
 
-  /** Exact-verified all-pairs n-gram Jaccard join with banded-MinHash
-    * CANDIDATE generation — the Σdf²-safe sibling of [[jaccardPairs]].
-    *
-    * Same output columns and the same rounded J values (verification
-    * is the exact codegen'd [[jaccardOfSets]] over the gram sets, not
-    * the signature-agreement estimate), but candidates come from LSH
-    * band buckets instead of the gram-token join, so cost is
-    * Σ_bucket |bucket|² over AND-amplified buckets — near-linear on
-    * corpora whose gram vocabulary saturates, where Σ_gram df² (the
-    * count join's row count) goes quadratic. The one contract
-    * difference: per-pair recall at J ≥ t is 1 − (1 − t^r)^b with r
-    * chosen by [[recallBandRows]] so the miss probability is ≤ 1e-6
-    * (deterministic per corpus: signatures are seeded) — vs the count
-    * join's exactly 1.
-    *
-    * Scale shape: one narrow signature map (numPerm hashes per gram),
-    * one ids-only bucket self-join (16-byte rows, ReusedExchange), one
-    * packed-long pair distinct, two hash joins re-attaching gram sets
-    * to CANDIDATE pairs only. The pair set is materialized eagerly
-    * (localCheckpoint) while the gram-set cache is hot. */
-  def jaccardPairsBanded(df: DataFrame, idCol: String, textCol: Column,
-      t: Double, n: Int = 3, numPerm: Int = 128): DataFrame = {
-    require(t > 0 && t <= 1, "threshold must be in (0, 1]")
-    val sets = gramSets(spreadWide(df), idCol, textCol, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      sets.count() // eager: the plan fans out (sig side + both verify sides)
-      jaccardPairsBandedFromSets(sets, t, numPerm)
-    } finally sets.unpersist(blocking = false)
-  }
-
-  /** [[jaccardPairsBanded]]'s body over an ALREADY persisted +
-    * materialized `(__id, __g)` gram-set frame — shared with
-    * [[jaccardPairsAuto]], whose probe builds the same cache; the
-    * result is `localCheckpoint`ed before the caller unpersists. */
-  private def jaccardPairsBandedFromSets(
-      sets: DataFrame, t: Double, numPerm: Int): DataFrame = {
-    {
-      val r = recallBandRows(t, numPerm)
-      val bands = numPerm / r
-      // band index rides INSIDE the hash (seed column) so the bucket
-      // join keys on one long; a cross-band hash collision only adds a
-      // spurious candidate that exact verification discards.
-      val banded = sets
-        .select(col("__id"), minhashSig(col("__g"), numPerm).as("__sig"))
-        .select(col("__id"), explode(transform(sequence(lit(0), lit(bands - 1)),
-          b => xxhash64(slice(col("__sig"), b * r + 1, lit(r)), b))).as("__bucket"))
-      val cand = banded.as("l").join(banded.as("r"), Seq("__bucket"))
-        .filter(col("l.__id") < col("r.__id"))
-        .select((shiftleft(col("l.__id"), 32) + col("r.__id")).as("__pair"))
-        .distinct()
-      val sa = sets.select(col("__id").cast("long").as("id_a"), col("__g").as("__ga"))
-      val sb = sets.select(col("__id").cast("long").as("id_b"), col("__g").as("__gb"))
-      cand
-        .select(shiftright(col("__pair"), 32).as("id_a"),
-          col("__pair").bitwiseAND(lit(0xFFFFFFFFL)).as("id_b"))
-        .join(sa, Seq("id_a")).join(sb, Seq("id_b"))
-        .withColumn("jaccard", round(jaccardOfSets(col("__ga"), col("__gb")), 6))
-        .filter(col("jaccard") >= t)
-        .select(col("id_a"), col("id_b"), col("jaccard"))
-        .localCheckpoint(true)
-    }
-  }
-
-  /** Routing decision behind [[jaccardPairsAuto]], exposed so the
-    * guardrail is spec-testable: true ⟹ the exact count-based join's
-    * Σdf² row count fits the per-document budget. */
-  private[graft] def routeExact(df: DataFrame, idCol: String, textCol: Column,
-      n: Int, maxJoinRowsPerDoc: Long): Boolean = {
-    val joinRows = gramJoinRows(df, idCol, textCol, n)
-    val nDocs = math.max(df.count(), 1L)
-    logRoute(joinRows, nDocs, maxJoinRowsPerDoc)
-  }
-
-  private def logRoute(joinRows: Long, nDocs: Long, maxJoinRowsPerDoc: Long): Boolean = {
+  /** The Jaccard router's decision, exposed so the guardrail is
+    * spec-testable on the function production routes on: true ⟹ the
+    * exact count join's probed row count ([[gramJoinRows]]) fits
+    * `maxJoinRowsPerDoc` per document. `setsB = None` is the self join
+    * (budget over |docs|); a bipartite join budgets over |L| + |R|.
+    * Counting materializes persisted set frames. */
+  private[graft] def routeExact(setsA: DataFrame, setsB: Option[DataFrame],
+      maxJoinRowsPerDoc: Long): Boolean = {
+    val nDocs = math.max(setsA.count() + setsB.fold(0L)(_.count()), 1L)
+    val joinRows = gramJoinRows(setsA, setsB.getOrElse(setsA))
     val exact = joinRows <= maxJoinRowsPerDoc * nDocs
-    val msg = s"jaccardPairsAuto: ngram join probe Σdf²=$joinRows over $nDocs docs " +
-      s"(budget ${maxJoinRowsPerDoc}/doc) → ${if (exact) "exact count join"
+    val msg = s"${routerName(setsB.isEmpty)}: ngram join probe ΣdfA·dfB=$joinRows over " +
+      s"$nDocs docs (budget ${maxJoinRowsPerDoc}/doc) → ${if (exact) "exact count join"
         else "banded-MinHash candidates + exact verify"}"
     if (exact) log.info(msg) else log.warn(msg)
     exact
   }
+
+  private def routerName(self: Boolean): String =
+    if (self) "jaccardPairsAuto" else "jaccardJoinAuto"
 
   /** Self-protecting exact n-gram Jaccard pair join: probes the gram
     * document-frequency distribution (one cheap aggregation) and runs
     * the count-based [[jaccardPairs]] only while its Σ_gram df² joined
     * rows fit `maxJoinRowsPerDoc · nDocs`; past the budget — the gram-
     * saturated regime where the count join goes quadratic — it routes
-    * to [[jaccardPairsBanded]] (LSH candidates, exact verify) and logs
-    * the decision at WARN.
+    * to banded-MinHash candidates verified by the exact codegen'd
+    * [[jaccardOfSets]], and logs the decision at WARN. Same output
+    * columns and the same rounded J values on either route; the banded
+    * route's one contract difference is per-pair recall
+    * 1 − (1 − t^r)^b ≥ 1 − 1e-6 ([[recallBandRows]]; deterministic per
+    * corpus: signatures are seeded) instead of exactly 1.
     *
     * The gram-set frame is tokenized ONCE and persisted; the probe,
     * the exact join's both token sides, and the banded route all read
@@ -1533,171 +1473,91 @@ object Dedup {
     * materialized (`localCheckpoint`) while the cache is hot, then the
     * cache is dropped — callers composing further pruning (limit,
     * narrow filters) pay full materialization at call time. Use
-    * [[jaccardPairs]] / [[jaccardPairsBanded]] directly when a lazy
-    * composable plan matters more than the guardrail. */
+    * [[jaccardPairs]] directly when a lazy composable plan matters
+    * more than the guardrail. */
   def jaccardPairsAuto(df: DataFrame, idCol: String, textCol: Column,
       t: Double, n: Int = 3, maxJoinRowsPerDoc: Long = 8192L): DataFrame =
+    jaccardAuto(df, idCol, textCol, None, t, n, maxJoinRowsPerDoc)
+
+  /** Self-protecting BIPARTITE n-gram Jaccard join — [[jaccardJoin]]'s
+    * guarded sibling, the decontamination/leak-report default. The
+    * same router as [[jaccardPairsAuto]]: probes Σ_gram dfL·dfR and
+    * runs the count-based [[jaccardJoin]] only while that fits
+    * `maxJoinRowsPerDoc · (|L| + |R|)`; past the budget — the
+    * oversized-reference regime where the two-sided join goes
+    * quadratic — it routes to banded-MinHash candidate pairs verified
+    * exactly, with the same recall contract. Both sides' gram-set
+    * frames are tokenized ONCE and persisted, and the result is EAGER
+    * on both routes. */
+  def jaccardJoinAuto(
+      left: DataFrame, leftId: String, leftText: Column,
+      right: DataFrame, rightId: String, rightText: Column,
+      t: Double, n: Int = 3, maxJoinRowsPerDoc: Long = 8192L): DataFrame =
+    jaccardAuto(left, leftId, leftText, Some((right, rightId, rightText)),
+      t, n, maxJoinRowsPerDoc)
+
+  /** The one Jaccard router behind [[jaccardPairsAuto]] (`right = None`)
+    * and [[jaccardJoinAuto]]. */
+  private def jaccardAuto(left: DataFrame, leftId: String, leftText: Column,
+      right: Option[(DataFrame, String, Column)],
+      t: Double, n: Int, maxJoinRowsPerDoc: Long): DataFrame = {
+    require(t > 0 && t <= 1, "threshold must be in (0, 1]")
     if (recallBandRows(t, 128) < 2) {
       // r = 1 bands have no AND-amplification: every pair sharing a
       // single minhash value becomes a candidate, so the banded path
       // costs ≥ the count join WITH the signature overhead on top
       // (measured 7× slower at t = 0.3). Below the amplification
       // regime the exact count join is also the cheaper join.
-      log.warn(s"jaccardPairsAuto: threshold $t too low for AND-amplified banding " +
-        "(r < 2 at numPerm=128) — staying on the exact count join; on a " +
+      log.warn(s"${routerName(right.isEmpty)}: threshold $t too low for AND-amplified " +
+        "banding (r < 2 at numPerm=128) — staying on the exact count join; on a " +
         "gram-saturated corpus raise t or pre-dedup with minhashDedup")
-      jaccardPairs(df, idCol, textCol, t, n)
-    } else {
-      val sets = gramSets(spreadWide(df), idCol, textCol, n)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val nDocs = math.max(sets.count(), 1L) // materializes the cache
-        val tok = sets.select(col("__id"),
-          size(col("__g")).as("__sz"), explode(col("__g")).as("__gram"))
-        val joinRows = tok.groupBy(col("__gram")).agg(count(lit(1)).as("__df"))
-          .agg(coalesce(sum(col("__df") * col("__df")), lit(0L)).as("__rows"))
-          .head().getLong(0)
-        if (logRoute(joinRows, nDocs, maxJoinRowsPerDoc))
-          countedPairs(
-            tok.select(col("__id").as("id_a"), col("__sz").as("__sza"), col("__gram")),
-            tok.select(col("__id").as("id_b"), col("__sz").as("__szb"), col("__gram")),
-            t, antiReflexive = true)
-            .localCheckpoint(true)
-        else jaccardPairsBandedFromSets(sets, t, numPerm = 128)
-      } finally sets.unpersist(blocking = false)
-    }
-
-  /** Σ_gram dfL·dfR — the exact bipartite count join's joined-row
-    * count — [[jaccardJoinAuto]]'s routing probe. The self-join probe
-    * ([[gramJoinRows]]) guards the within-corpus shape; this is its
-    * two-sided analog, the quantity that detonated the reference's
-    * decontamination when both sides scaled
-    * (/root/reference/docs/adr/003-pandas-vs-pyspark-strategy.md:
-    * 165-189's 48-hour nested-loop lesson, measured here as 20.6×
-    * growth at 10× in the round-4 rehearsal). */
-  private[graft] def bipartiteJoinRows(
-      left: DataFrame, leftId: String, leftText: Column,
-      right: DataFrame, rightId: String, rightText: Column, n: Int): Long =
-    bipartiteJoinRowsFromTokens(
-      tokens(spreadWide(left), leftId, leftText, n),
-      tokens(spreadWide(right), rightId, rightText, n))
-
-  /** Σ_gram dfL·dfR over two `__gram` token streams — the ONE
-    * implementation of the bipartite routing formula, shared by the
-    * spec-facing [[routeExactBipartite]] probe and [[jaccardJoinAuto]]
-    * (which feeds it the token streams read from its gram-set caches,
-    * so the guardrail the spec tests and the guardrail production
-    * routes on cannot drift apart). */
-  private def bipartiteJoinRowsFromTokens(ta: DataFrame, tb: DataFrame): Long =
-    ta.groupBy(col("__gram")).agg(count(lit(1)).as("__dfl"))
-      .join(tb.groupBy(col("__gram")).agg(count(lit(1)).as("__dfr")), Seq("__gram"))
-      .agg(coalesce(sum(col("__dfl") * col("__dfr")), lit(0L)).as("__rows"))
-      .head().getLong(0)
-
-  /** Routing decision behind [[jaccardJoinAuto]], exposed so the
-    * guardrail is spec-testable: true ⟹ the exact bipartite count
-    * join's Σ dfL·dfR row count fits the per-document budget. */
-  private[graft] def routeExactBipartite(
-      left: DataFrame, leftId: String, leftText: Column,
-      right: DataFrame, rightId: String, rightText: Column,
-      n: Int, maxJoinRowsPerDoc: Long): Boolean = {
-    val joinRows = bipartiteJoinRows(left, leftId, leftText, right, rightId, rightText, n)
-    val nDocs = math.max(left.count() + right.count(), 1L)
-    logRouteBipartite(joinRows, nDocs, maxJoinRowsPerDoc)
-  }
-
-  private def logRouteBipartite(joinRows: Long, nDocs: Long,
-      maxJoinRowsPerDoc: Long): Boolean = {
-    val exact = joinRows <= maxJoinRowsPerDoc * nDocs
-    val msg = s"jaccardJoinAuto: bipartite ngram probe ΣdfL·dfR=$joinRows over " +
-      s"$nDocs docs (budget ${maxJoinRowsPerDoc}/doc) → ${if (exact) "exact count join"
-        else "banded-MinHash candidates + exact verify"}"
-    if (exact) log.info(msg) else log.warn(msg)
-    exact
-  }
-
-  /** Self-protecting BIPARTITE n-gram Jaccard join — [[jaccardJoin]]'s
-    * guarded sibling, the decontamination/leak-report default. Probes
-    * Σ_gram dfL·dfR (the exact count join's joined-row count, ONE
-    * vocabulary-sized aggregation per side) and runs the count-based
-    * [[jaccardJoin]] only while that fits `maxJoinRowsPerDoc · (|L| +
-    * |R|)`; past the budget — the oversized-reference regime where the
-    * two-sided join goes quadratic — it routes to banded-MinHash
-    * candidate pairs verified by the exact codegen'd [[jaccardOfSets]],
-    * and logs the decision at WARN. Same output columns and the same
-    * rounded J values on either route; the banded route's one contract
-    * difference is per-pair recall 1 − (1 − t^r)^b ≥ 1 − 1e-6
-    * ([[recallBandRows]]) instead of exactly 1.
-    *
-    * Both sides' gram-set frames are tokenized ONCE and persisted; the
-    * probe, the exact join's token streams, and the banded route's
-    * signatures + verify all read the caches. Like
-    * [[jaccardPairsAuto]], the result is EAGER on both routes
-    * (materialized via `localCheckpoint` while the caches are hot). */
-  def jaccardJoinAuto(
-      left: DataFrame, leftId: String, leftText: Column,
-      right: DataFrame, rightId: String, rightText: Column,
-      t: Double, n: Int = 3, maxJoinRowsPerDoc: Long = 8192L): DataFrame = {
-    require(t > 0 && t <= 1, "threshold must be in (0, 1]")
-    if (recallBandRows(t, 128) < 2) {
-      // r = 1 bands have no AND-amplification — same reasoning as
-      // jaccardPairsAuto: below the amplification regime the exact
-      // count join is also the cheaper join.
-      log.warn(s"jaccardJoinAuto: threshold $t too low for AND-amplified banding " +
-        "(r < 2 at numPerm=128) — staying on the exact count join")
-      jaccardJoin(left, leftId, leftText, right, rightId, rightText, t, n)
+      exactJaccard(left, leftId, leftText, right, t, n)
     } else {
       val lv = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      val setsL = gramSets(spreadWide(left), leftId, leftText, n).persist(lv)
-      val setsR = gramSets(spreadWide(right), rightId, rightText, n).persist(lv)
+      val setsA = gramSets(spreadWide(left), leftId, leftText, n).persist(lv)
+      val setsB = right.map { case (r, rId, rText) =>
+        gramSets(spreadWide(r), rId, rText, n).persist(lv) }
       try {
-        val nDocs = math.max(setsL.count() + setsR.count(), 1L) // materializes both
-        def toks(sets: DataFrame): DataFrame = sets.select(col("__id"),
-          size(col("__g")).as("__sz"), explode(col("__g")).as("__gram"))
-        val ta = toks(setsL)
-        val tb = toks(setsR)
-        val joinRows = bipartiteJoinRowsFromTokens(ta, tb)
-        if (logRouteBipartite(joinRows, nDocs, maxJoinRowsPerDoc))
-          countedPairs(
-            ta.select(col("__id").as("id_a"), col("__sz").as("__sza"), col("__gram")),
-            tb.select(col("__id").as("id_b"), col("__sz").as("__szb"), col("__gram")),
-            t, antiReflexive = false)
+        if (routeExact(setsA, setsB, maxJoinRowsPerDoc)) {
+          val ta = tokens(setsA)
+          countedPairs(ta, setsB.fold(ta)(tokens), t, antiReflexive = setsB.isEmpty)
             .localCheckpoint(true)
-        else jaccardJoinBandedFromSets(setsL, setsR, t, numPerm = 128)
-      } finally {
-        setsL.unpersist(blocking = false)
-        setsR.unpersist(blocking = false)
-      }
+        } else bandedJaccard(setsA, setsB, t, numPerm = 128)
+      } finally (setsA +: setsB.toSeq).foreach(_.unpersist(blocking = false))
     }
   }
 
-  /** Banded-MinHash candidates + exact verify over two ALREADY
-    * persisted `(__id, __g)` gram-set frames — [[jaccardJoinAuto]]'s
-    * oversized-reference route, the bipartite analog of
-    * [[jaccardPairsBandedFromSets]]. Candidates are L×R band-bucket
-    * collisions (ids-only 16-byte rows), never an id-ordered self
-    * pair, so every cross pair is considered exactly once. */
-  private def jaccardJoinBandedFromSets(
-      setsL: DataFrame, setsR: DataFrame, t: Double, numPerm: Int): DataFrame = {
-    val r = recallBandRows(t, numPerm)
-    val bands = numPerm / r
-    def bandedSide(sets: DataFrame): DataFrame = sets
-      .select(col("__id"), minhashSig(col("__g"), numPerm).as("__sig"))
-      .select(col("__id"), explode(transform(sequence(lit(0), lit(bands - 1)),
-        b => xxhash64(slice(col("__sig"), b * r + 1, lit(r)), b))).as("__bucket"))
-    // distinct on BOTH ids, not a packed long: unlike the self-join
-    // hot aggregation (countedPairs, where the pack is the measured
-    // hash-agg win and the 32-bit assumption is documented), the two
-    // sides here are UNRELATED id spaces — a reference set with
-    // ≥ 2^32 ids would silently overflow into the corpus-id bits and
-    // drop the wrong rows. A 16-byte distinct key on a candidate list
-    // costs nothing measurable.
-    val cand = bandedSide(setsL).as("l").join(bandedSide(setsR).as("r"), Seq("__bucket"))
-      .select(col("l.__id").cast("long").as("id_a"),
-        col("r.__id").cast("long").as("id_b"))
+  /** Banded-MinHash candidates + exact verify over persisted
+    * [[gramSets]] frames — the router's past-the-budget route, near-
+    * linear where Σ_gram df² goes quadratic: its cost is Σ_bucket
+    * |bucket|² over AND-amplified buckets. `setsB = None` is the self
+    * join (candidates oriented id_a < id_b); otherwise every colliding
+    * L×R pair is considered once.
+    *
+    * Scale shape: one narrow signature map (numPerm hashes per gram),
+    * one ids-only (band, bucket) join (a ReusedExchange when self),
+    * one candidate distinct, two hash joins re-attaching gram sets to
+    * CANDIDATE pairs only; the result is `localCheckpoint`ed before the
+    * caller unpersists. The distinct keys on BOTH ids, not a packed
+    * long: bipartite sides are UNRELATED id spaces — a reference set
+    * with ≥ 2^32 ids would silently overflow into the corpus-id bits
+    * and drop the wrong rows — and a 16-byte distinct key on a
+    * candidate list costs nothing measurable. */
+  private def bandedJaccard(setsA: DataFrame, setsB: Option[DataFrame],
+      t: Double, numPerm: Int): DataFrame = {
+    val bands = numPerm / recallBandRows(t, numPerm)
+    def banded(sets: DataFrame): DataFrame = sets
+      .select(col("__id"), explode(bandKeys(minhashSig(col("__g"), numPerm), numPerm, bands))
+        .as("__b"))
+      .select(col("__id"), col("__b.band"), col("__b.bucket"))
+    val ba = banded(setsA)
+    val joined = ba.as("l").join(setsB.fold(ba)(banded).as("r"), Seq("band", "bucket"))
+    val cand = (if (setsB.isEmpty) joined.filter(col("l.__id") < col("r.__id")) else joined)
+      .select(col("l.__id").cast("long").as("id_a"), col("r.__id").cast("long").as("id_b"))
       .distinct()
-    val sa = setsL.select(col("__id").cast("long").as("id_a"), col("__g").as("__ga"))
-    val sb = setsR.select(col("__id").cast("long").as("id_b"), col("__g").as("__gb"))
+    val sa = setsA.select(col("__id").cast("long").as("id_a"), col("__g").as("__ga"))
+    val sb = setsB.getOrElse(setsA)
+      .select(col("__id").cast("long").as("id_b"), col("__g").as("__gb"))
     cand
       .join(sa, Seq("id_a")).join(sb, Seq("id_b"))
       .withColumn("jaccard", round(jaccardOfSets(col("__ga"), col("__gb")), 6))

@@ -18,6 +18,31 @@ import org.apache.spark.sql.functions._
   */
 object DupClusters {
 
+  /** One job over an integral-id edge frame `(id_a, id_b)`: each
+    * partition's edge count, plus its edges when that count is within
+    * the per-partition cap ⌈2(T+1)/P⌉ (T = `driverEdgeThreshold`,
+    * P = partitions), else none. Driver intake is therefore at most
+    * P·⌈2(T+1)/P⌉ ≤ 2(T+1)+P edge tuples however many partitions the
+    * frame has, and the fetch is complete exactly when every partition
+    * shipped all its edges. */
+  private[graft] def cappedEdgeFetch(edges: DataFrame,
+      driverEdgeThreshold: Long): Array[(Long, Array[(Long, Long)])] = {
+    val rdd = edges.rdd
+    val nParts = math.max(1, rdd.getNumPartitions)
+    val cap = (2L * (driverEdgeThreshold + 1) + nParts - 1) / nParts
+    rdd.mapPartitions { it =>
+      val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+      var cnt = 0L
+      it.foreach { row =>
+        cnt += 1
+        if (cnt <= cap)
+          buf += ((row.get(0).asInstanceOf[Number].longValue,
+            row.get(1).asInstanceOf[Number].longValue))
+      }
+      Iterator.single((cnt, if (cnt <= cap) buf.toArray else Array.empty[(Long, Long)]))
+    }.collect()
+  }
+
   /** Connected components of the near-dup graph by min-label
     * propagation: every vertex ends labeled with the smallest id
     * reachable from it (the canonical cluster id).
@@ -82,16 +107,14 @@ object DupClusters {
     //
     // The size gate and the edge fetch fuse into ONE job (they used to
     // be a count job followed by a collect job — two scheduled jobs
-    // plus a driver gap for every CC call in the engine): each
-    // partition emits its row count plus its rows CAPPED at ~2× the
-    // per-partition share of the threshold. When no partition hit its
-    // cap and the total is inside the threshold, the capped rows ARE
-    // the complete edge list; any overflow keeps only the counts
-    // (driver intake stays ≤ ~2× threshold tuples by construction) and
-    // the distributed loop below runs against the already-materialized
-    // checkpoint blocks with nEdges known. A skew-pathological small
-    // graph (one partition > 2× the average at the threshold) merely
-    // falls back to the distributed loop — never a wrong answer.
+    // plus a driver gap for every CC call in the engine): see
+    // `cappedEdgeFetch`. When no partition hit its cap and the total
+    // is inside the threshold, the fetched rows ARE the complete edge
+    // list; otherwise the distributed loop below runs against the
+    // already-materialized checkpoint blocks with nEdges known. A
+    // skew-pathological small graph (one partition > 2× the average at
+    // the threshold) merely falls back to the distributed loop — never
+    // a wrong answer.
     val idType = e0.schema.fields(0).dataType
     val integral = idType.isInstanceOf[org.apache.spark.sql.types.LongType] ||
       idType.isInstanceOf[org.apache.spark.sql.types.IntegerType] ||
@@ -99,23 +122,9 @@ object DupClusters {
     var nEdges = -1L
     var collected: Array[(Long, Long)] = null
     if (integral) {
-      val rdd0 = e0.rdd
-      val cap = math.max(1024L, 2L * (driverEdgeThreshold + 1) /
-        math.max(1, rdd0.getNumPartitions))
-      val parts = rdd0.mapPartitions { it =>
-        val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-        var cnt = 0L
-        it.foreach { row =>
-          cnt += 1
-          if (cnt <= cap)
-            buf += ((row.get(0).asInstanceOf[Number].longValue,
-              row.get(1).asInstanceOf[Number].longValue))
-        }
-        Iterator.single((cnt, if (cnt <= cap) buf.toArray
-          else Array.empty[(Long, Long)]))
-      }.collect()
+      val parts = cappedEdgeFetch(e0, driverEdgeThreshold)
       nEdges = parts.map(_._1).sum
-      if (nEdges <= driverEdgeThreshold && parts.forall(p => p._1 <= cap))
+      if (nEdges <= driverEdgeThreshold && parts.forall(p => p._1 == p._2.length))
         collected = parts.flatMap(_._2)
     } else nEdges = e0.count()
     if (collected != null) {

@@ -113,8 +113,8 @@ object Images {
         new java.util.HashMap()
     }
 
-  /** Per-thread ImageWriter cache keyed by output format — the encode
-    * twin of [[readerCache]].
+  /** Per-thread ImageWriter cache keyed by (output format,
+    * `BufferedImage` type) — the encode twin of [[readerCache]].
     *
     * `ImageIO.write` re-runs service-registry writer DISCOVERY per
     * call (`getWriter` → `ServiceRegistry.getServiceProviders`);
@@ -128,29 +128,39 @@ object Images {
     * `setOutput` + `write(img)` — `ImageIO.write`'s own call sequence
     * (JDK `ImageIO.doWrite`: `setOutput(stream); write(img)`), same
     * plugin, no write param — so the emitted bytes are BIT-IDENTICAL
-    * (ImagesSpec pins them against a fresh `ImageIO.write` call). A
-    * writer that throws is disposed and dropped, never reused dirty. */
+    * (ImagesSpec pins them against a fresh `ImageIO.write` call). The
+    * key includes the image type because the lookup is type-aware: a
+    * writer chosen for one type is never reused for another (all
+    * `TYPE_CUSTOM` layouts share one key). A writer that throws is
+    * disposed and dropped, never reused dirty. */
   private val writerCache =
-    new ThreadLocal[java.util.HashMap[String, javax.imageio.ImageWriter]] {
-      override def initialValue(): java.util.HashMap[String, javax.imageio.ImageWriter] =
+    new ThreadLocal[java.util.HashMap[(String, Int), javax.imageio.ImageWriter]] {
+      override def initialValue(): java.util.HashMap[(String, Int), javax.imageio.ImageWriter] =
         new java.util.HashMap()
     }
 
   /** Encode via the per-thread cached writer; bit-identical to
-    * `ImageIO.write(img, fmt, new MemoryCacheImageOutputStream(bos))`. */
+    * `ImageIO.write(img, fmt, new MemoryCacheImageOutputStream(bos))`.
+    *
+    * Throws where `ImageIO.write` would return `false`: when no
+    * registered writer can encode `img` in `fmt`, this raises
+    * `IllegalArgumentException` instead of yielding empty bytes, and an
+    * exception from the writer itself propagates — an executor task
+    * calling it fails rather than emitting an empty payload. */
   private[graft] def encodeImage(img: BufferedImage, fmt: String): Array[Byte] = {
     val bos = new ByteArrayOutputStream()
     // explicit memory-cache stream: the default write path spools
     // through an executor temp file (see decodeGray)
     val mos = new javax.imageio.stream.MemoryCacheImageOutputStream(bos)
     val cache = writerCache.get()
-    var writer = cache.get(fmt)
+    val key = (fmt, img.getType)
+    var writer = cache.get(key)
     if (writer == null) {
       val it = javax.imageio.ImageIO.getImageWriters(
         javax.imageio.ImageTypeSpecifier.createFromRenderedImage(img), fmt)
-      require(it.hasNext, s"no ImageWriter for format $fmt")
+      require(it.hasNext, s"no ImageWriter for format $fmt and image type ${img.getType}")
       writer = it.next()
-      cache.put(fmt, writer)
+      cache.put(key, writer)
     }
     try {
       writer.setOutput(mos)
@@ -158,7 +168,7 @@ object Images {
     } catch { case e: Throwable =>
       // never reuse a writer that threw mid-encode — its internal
       // state may be corrupt; the next call re-creates one
-      cache.remove(fmt)
+      cache.remove(key)
       try writer.dispose() catch { case _: Throwable => () }
       throw e
     } finally {

@@ -128,16 +128,14 @@ object Incremental {
     * /incremental design point). */
   def writeBandedSignatures(corpus: DataFrame, idCol: String, textCol: Column,
       table: String, path: String, numBuckets: Int = 64,
-      numPerm: Int = 128, bands: Int = 32, shingleSize: Int = 3): Unit = {
-    require(numPerm % bands == 0, "bands must divide numPerm")
+      numPerm: Int = 128, bands: Int = 32, shingleSize: Int = 3): Unit =
     banded(Dedup.minhashSignatures(corpus, idCol, textCol, numPerm, shingleSize),
-        idCol, bands, numPerm / bands)
+        idCol, numPerm, bands)
       .repartition(numBuckets, col("band"), col("bucket"))
       .write.mode(SaveMode.Overwrite)
       .bucketBy(numBuckets, "band", "bucket").sortBy("band", "bucket")
       .option("path", path)
       .saveAsTable(table)
-  }
 
   /** Grow the banded-signature state by a batch with the SAME bucket
     * spec (parameters must match [[writeBandedSignatures]]'s). The
@@ -149,15 +147,13 @@ object Incremental {
     * composition that gets this right. */
   def appendBandedSignatures(batch: DataFrame, idCol: String,
       textCol: Column, table: String, numBuckets: Int = 64,
-      numPerm: Int = 128, bands: Int = 32, shingleSize: Int = 3): Unit = {
-    require(numPerm % bands == 0, "bands must divide numPerm")
+      numPerm: Int = 128, bands: Int = 32, shingleSize: Int = 3): Unit =
     banded(Dedup.minhashSignatures(batch, idCol, textCol, numPerm, shingleSize),
-        idCol, bands, numPerm / bands)
+        idCol, numPerm, bands)
       .repartition(numBuckets, col("band"), col("bucket"))
       .write.mode(SaveMode.Append).format("parquet")
       .bucketBy(numBuckets, "band", "bucket").sortBy("band", "bucket")
       .saveAsTable(table)
-  }
 
   /** [[Dedup.minhashDedupAgainst]] against a persisted
     * [[writeBandedSignatures]] table: drop every incoming row whose
@@ -188,7 +184,6 @@ object Incremental {
       incoming: DataFrame, idCol: String, textCol: Column,
       bandedCorpus: DataFrame, threshold: Double,
       numPerm: Int, bands: Int, shingleSize: Int): DataFrame = {
-    require(numPerm % bands == 0, "bands must divide numPerm")
     // exactly (band, bucket, <id>, sig) — an extra column would make
     // the id inference silently pick the wrong one, so reject it
     val corpusIdCol = bandedCorpus.columns.filterNot(Set("band", "bucket", "sig")) match {
@@ -199,15 +194,13 @@ object Incremental {
     }
     val inc = banded(
       Dedup.minhashSignatures(incoming, idCol, textCol, numPerm, shingleSize),
-      idCol, bands, numPerm / bands)
+      idCol, numPerm, bands)
       .withColumnRenamed(idCol, "__idI").withColumnRenamed("sig", "__sigI")
     val cor = bandedCorpus
       .select(col("band"), col("bucket"),
         col(corpusIdCol).as("__idC"), col("sig").as("__sigC"))
-    val agree = text.expr2col(graft.functions.SigAgreeCount(
-      text.col2expr(col("__sigI")), text.col2expr(col("__sigC"))))
     inc.join(cor, Seq("band", "bucket"))
-      .filter(agree.cast("double") / numPerm >= threshold)
+      .filter(Dedup.sigJaccard(col("__sigI"), col("__sigC"), numPerm) >= threshold)
       .select(col("__idI").as(idCol)).distinct()
   }
 
@@ -296,16 +289,14 @@ object Incremental {
   }
 
   /** Explode a `(idCol, __sig)` signature frame into banded collision
-    * rows `(band, bucket, idCol, sig)` — `bucket` is the xxhash64 of
-    * the band's `r` signature slots (AND-amplification within a band,
-    * OR across bands; same hashing as [[Dedup.minhashDedupAgainst]]).
-    * Package-visible so the q106 oracle export can materialize the
-    * incoming side's banded keying for the DuckDB replay. */
-  private[graft] def banded(sigDf: DataFrame, idCol: String, bands: Int, r: Int): DataFrame =
+    * rows `(band, bucket, idCol, sig)` — the state's row format, keyed
+    * by [[Dedup.bandKeys]], the band layout every banded MinHash path
+    * shares. Package-visible so the q106 oracle export can materialize
+    * the incoming side's banded keying for the DuckDB replay. */
+  private[graft] def banded(sigDf: DataFrame, idCol: String,
+      numPerm: Int, bands: Int): DataFrame =
     sigDf.select(col(idCol), col("__sig"),
-        explode(transform(sequence(lit(0), lit(bands - 1)),
-          b => struct(b.as("band"),
-            xxhash64(slice(col("__sig"), b * r + 1, lit(r))).as("bucket")))).as("__b"))
+        explode(Dedup.bandKeys(col("__sig"), numPerm, bands)).as("__b"))
       .select(col("__b.band").as("band"), col("__b.bucket").as("bucket"),
         col(idCol), col("__sig").as("sig"))
 

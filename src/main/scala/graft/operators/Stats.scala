@@ -70,22 +70,6 @@ object Stats {
   def charCount(c: Column, chars: String): Column =
     length(c) - length(translate(c, chars, ""))
 
-  /** A3 — duplicate rate over a subset of columns. */
-  def duplicateRate(df: DataFrame, cols: Seq[String]): DataFrame = {
-    val k = struct(cols.map(col): _*)
-    df.agg(
-      count(lit(1)).as("total_records"),
-      count_distinct(k).as("unique_records"),
-      round((count(lit(1)) - count_distinct(k)) / count(lit(1)), 6).as("duplicate_rate"))
-  }
-
-  /** A7 — top-K value frequencies with deterministic tie-break on the
-    * value itself. */
-  def topK(df: DataFrame, c: Column, k: Int): DataFrame =
-    df.groupBy(c.as("value")).agg(count(lit(1)).as("n"))
-      .orderBy(desc("n"), asc("value"))
-      .limit(k)
-
   /** Per-document word-repetition profile — the Gopher-style
     * repetition filters of LLM data curation: documents dominated by a
     * few repeated words (boilerplate, keyword stuffing, templated

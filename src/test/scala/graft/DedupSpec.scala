@@ -248,19 +248,22 @@ class DedupSpec extends AnyFunSuite {
     val docs = (base ++ dups).toDF("id", "t")
 
     val nDocs = docs.count()
-    val joinRows = Dedup.gramJoinRows(docs, "id", col("t"), 3)
+    val sets = Dedup.gramSets(docs, "id", col("t"), 3)
+    val joinRows = Dedup.gramJoinRows(sets, sets)
     assert(joinRows > 8192L * nDocs,
       s"fixture must be in the quadratic regime: Σdf²=$joinRows for $nDocs docs")
-    assert(!Dedup.routeExact(docs, "id", col("t"), 3, 8192L),
+    assert(!Dedup.routeExact(sets, None, 8192L),
       "probe must route the saturated corpus away from the count join")
     // a small real corpus with a tame gram tail routes exact
     val tiny = base.take(20).toDF("id", "t")
-    assert(Dedup.routeExact(tiny, "id", col("t"), 3, 8192L))
+    assert(Dedup.routeExact(Dedup.gramSets(tiny, "id", col("t"), 3), None, 8192L))
 
     def key(r: org.apache.spark.sql.Row) = (r.getLong(0), r.getLong(1), r.getDouble(2))
     val exact = Dedup.jaccardPairs(docs, "id", col("t"), t = 0.8, n = 3)
       .collect().map(key).toSet
-    val banded = Dedup.jaccardPairsBanded(docs, "id", col("t"), t = 0.8, n = 3)
+    // a zero budget forces the router's banded route
+    val banded = Dedup.jaccardPairsAuto(docs, "id", col("t"), t = 0.8, n = 3,
+        maxJoinRowsPerDoc = 0L)
       .collect().map(key).toSet
     assert(banded === exact, s"banded=${banded.size} exact=${exact.size}")
     assert(exact.size >= 20, "planted duplicates must appear as pairs")
@@ -306,12 +309,12 @@ class DedupSpec extends AnyFunSuite {
     val evalDf = eval.toDF("id", "t")
 
     // fixture must be past the budget so the banded route fires
-    assert(!Dedup.routeExactBipartite(evalDf, "id", col("t"),
-      trainDf, "id", col("t"), n = 3, maxJoinRowsPerDoc = 512L),
+    def sets(df: org.apache.spark.sql.DataFrame) = Dedup.gramSets(df, "id", col("t"), 3)
+    assert(!Dedup.routeExact(sets(evalDf), Some(sets(trainDf)), maxJoinRowsPerDoc = 512L),
       "probe must route the oversized two-sided shape away from the count join")
     // and a benchmark-sized reference side routes exact
-    assert(Dedup.routeExactBipartite(evalDf.limit(5), "id", col("t"),
-      trainDf.limit(20), "id", col("t"), n = 3, maxJoinRowsPerDoc = 8192L))
+    assert(Dedup.routeExact(sets(evalDf.limit(5)), Some(sets(trainDf.limit(20))),
+      maxJoinRowsPerDoc = 8192L))
 
     def key(r: org.apache.spark.sql.Row) = (r.getLong(0), r.getLong(1), r.getDouble(2))
     val exact = Dedup.jaccardJoin(evalDf, "id", col("t"),

@@ -96,6 +96,22 @@ class DupClustersSpec extends AnyFunSuite {
     assert(fast === loop)
   }
 
+  test("fast-path edge fetch: driver intake stays O(threshold) at 10k partitions") {
+    // 4 edges in each of 10k partitions, 40k edges in all: over a
+    // 10k threshold, and every partition over its ⌈2(T+1)/P⌉ = 3 cap
+    val edges = spark.range(0L, 40000L, 1L, 10000)
+      .select(col("id").as("id_a"), (col("id") + 1).as("id_b"))
+    val t = 10000L
+    val parts = DupClusters.cappedEdgeFetch(edges, t)
+    assert(parts.length === 10000)
+    assert(parts.map(_._1).sum === 40000L)
+    val intake = parts.map(_._2.length.toLong).sum
+    assert(intake <= 2 * (t + 1) + parts.length, s"driver intake $intake edge tuples")
+    // inside the threshold the same fetch is complete
+    val all = DupClusters.cappedEdgeFetch(edges, 1L << 21)
+    assert(all.forall(p => p._1 == p._2.length) && all.map(_._2.length).sum === 40000)
+  }
+
   test("clusterDedup keeps exactly one best row per cluster (not per pair)") {
     // chain 1~2~3: pair-local drop-id_b would keep {1}; cluster dedup
     // keeps the best by score — row 2 — exactly once.

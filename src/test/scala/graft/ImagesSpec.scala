@@ -131,6 +131,37 @@ class ImagesSpec extends AnyFunSuite {
     }
   }
 
+  test("encodeImage keys its cached writer on image type: mixed types on one thread") {
+    // writer lookup is type-aware, so a writer cached for one
+    // BufferedImage type must not serve another: interleave types on
+    // this one thread and match fresh ImageIO.write bytes every time
+    def reference(img: java.awt.image.BufferedImage, fmt: String): (Boolean, Array[Byte]) = {
+      val bos = new java.io.ByteArrayOutputStream()
+      val mos = new javax.imageio.stream.MemoryCacheImageOutputStream(bos)
+      val ok = javax.imageio.ImageIO.write(img, fmt, mos)
+      mos.close()
+      (ok, bos.toByteArray)
+    }
+    def gradient(tpe: Int): java.awt.image.BufferedImage = {
+      val img = new java.awt.image.BufferedImage(16, 12, tpe)
+      for (y <- 0 until 12; x <- 0 until 16) img.setRGB(x, y, (x * 15 << 16) | (y * 20 << 8) | 77)
+      img
+    }
+    import java.awt.image.BufferedImage.{TYPE_BYTE_GRAY, TYPE_INT_ARGB, TYPE_INT_RGB}
+    for (fmt <- Seq("png", "jpg"); _ <- 0 to 1; tpe <- Seq(TYPE_INT_RGB, TYPE_BYTE_GRAY)) {
+      val i = gradient(tpe)
+      val (ok, bytes) = reference(i, fmt)
+      assert(ok)
+      assert(java.util.Arrays.equals(Images.encodeImage(i, fmt), bytes),
+        s"cached-writer bytes differ from ImageIO.write: fmt=$fmt type=$tpe")
+    }
+    // no JPEG writer takes alpha: ImageIO.write returns false, and
+    // encodeImage throws instead of reusing the RGB writer cached above
+    val argb = gradient(TYPE_INT_ARGB)
+    assert(!reference(argb, "jpg")._1)
+    intercept[IllegalArgumentException](Images.encodeImage(argb, "jpg"))
+  }
+
   test("imageNearDedup: variants drop, bases and corrupt rows survive; seen-not-kept contract") {
     val imgs = Images.syntheticCorpus(
       spark.range(0, 120).toDF("doc_id"), "doc_id",
